@@ -45,10 +45,11 @@ def stats(donations: DataFrame, pot_payouts: DataFrame) -> DataFrame:
 
 def donors_leaderboard(accounts: DataFrame, donations: DataFrame, k: int | None = None) -> DataFrame:
     """DonorsAPI (accounts/api.py:80-92): accounts with ≥1 donation,
-    ordered by total donated USD desc (sort param accounts/api.py:85-88)."""
+    ordered by total donated USD desc (sort param accounts/api.py:85-88),
+    ties by id (O2 total order) — the same order with or without ``k``."""
     donors = semi(accounts, donations, accounts["id"] == donations["donor_id"])
-    ordered = donors.orderBy(F.desc("total_donations_out_usd"))
-    return top_k(donors, [F.desc("total_donations_out_usd"), F.asc("id")], k) if k else ordered
+    order = [F.desc("total_donations_out_usd"), F.asc("id")]
+    return top_k(donors, order, k) if k else donors.orderBy(*order)
 
 
 def account_donations_received(donations: DataFrame, account_id: str) -> DataFrame:

@@ -14,9 +14,14 @@ trigger O(batch size + touched buckets) and removes the truncation window:
   distinct-collect (at most ``n_buckets`` small values — same bounded-
   materialization pattern as the IVF centroids);
 - every rewrite lands in a NEW versioned directory
-  (``b{bucket}/v{batch_id}``); nothing is ever deleted in place. Readers
-  assemble the table from one small JSON manifest mapping
-  bucket -> current version;
+  (``__bk={bucket}/__v={batch_id}``); nothing is ever deleted in place.
+  Readers assemble the table from one small JSON manifest mapping
+  bucket -> current version. Every directory level between the table
+  dir and the data files is hive-style ``name=value`` (including a
+  ``partition_col`` level below the version), so one parquet scan rooted
+  at the table dir reads any set of bucket versions; the layout columns
+  it discovers (``__bk``, ``__v``) are dropped, while ``__bucket`` stays
+  a data column;
 - publishing is an atomic ``os.replace`` of that one manifest file. A
   crash anywhere — mid-staging, mid-rename, mid-GC — leaves the previous
   manifest pointing at fully-written directories, so there is NO state in
@@ -54,6 +59,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -64,6 +70,11 @@ from .merge import upsert
 MANIFEST = "manifest.json"
 BUCKET_COL = "__bucket"
 DEFAULT_N_BUCKETS = 16
+# directory levels ``__bk={bucket}/__v={batch_id}``: partition columns to a
+# scan rooted at the table dir, named apart from every data column
+BUCKET_DIR_COL = "__bk"
+VERSION_DIR_COL = "__v"
+_BUCKET_DIR_RE = re.compile(rf"{BUCKET_DIR_COL}=\d+")
 
 
 def bucket_expr(natural_key: list[str], n_buckets: int) -> Column:
@@ -118,7 +129,15 @@ def _write_manifest_atomic(table_dir: str, manifest: dict) -> None:
 
 
 def _bucket_dir(table_dir: str, bucket: int | str) -> str:
-    return os.path.join(table_dir, f"b{bucket}")
+    return os.path.join(table_dir, f"{BUCKET_DIR_COL}={bucket}")
+
+
+def version_dir(table_dir: str, bucket: int | str, version: str) -> str:
+    """Directory of one bucket version; ``version`` is the manifest's
+    name for it (``v{batch_id}``)."""
+    return os.path.join(
+        _bucket_dir(table_dir, bucket), f"{VERSION_DIR_COL}={version.removeprefix('v')}"
+    )
 
 
 def current_paths(
@@ -126,10 +145,20 @@ def current_paths(
 ) -> list[str]:
     wanted = None if buckets is None else {str(b) for b in buckets}
     return [
-        os.path.join(_bucket_dir(table_dir, b), v)
+        version_dir(table_dir, b, v)
         for b, v in sorted(manifest["buckets"].items())
         if wanted is None or b in wanted
     ]
+
+
+def _snapshot_paths(table_dir: str) -> set[str]:
+    """Version dirs referenced by any retained snapshot manifest."""
+    live: set[str] = set()
+    for batch_id in history(table_dir):
+        snap = read_manifest(table_dir, at_batch=batch_id)
+        if snap:
+            live.update(current_paths(table_dir, snap))
+    return live
 
 
 def read_table(
@@ -146,15 +175,13 @@ def read_table(
     With ``at_batch``, time-travel: read the table as of that retained
     batch's snapshot manifest (requires merge_batch(retain_history=True)).
 
-    Tables created with ``partition_col`` (date-partitioned silver, SURVEY
-    §4's donated_at composite-index mapping) read as a union of per-
-    bucket-version scans, each rooted at its version dir so Spark's hive-
-    style partition discovery restores the partition column — a range
-    predicate on it then prunes FILES inside every scan (PartitionFilters,
-    guarded by tests/test_storage.py). One scan per current bucket version
-    (≤ n_buckets): fine at the tens-of-buckets scale this store targets;
-    a thousands-of-buckets deployment wants the date-major layout of a
-    real lakehouse format instead (module docstring).
+    Every read is ONE parquet scan over the wanted bucket-version dirs,
+    rooted at the table dir (``basePath``): the layout's ``name=value``
+    dir levels are discovered as partition columns and dropped. Tables
+    created with ``partition_col`` (date-partitioned silver, SURVEY §4's
+    donated_at composite-index mapping) get that column back from the
+    same discovery, so a range predicate on it prunes FILES across every
+    bucket (PartitionFilters, guarded by tests/test_storage.py).
     """
     manifest = read_manifest(table_dir, at_batch=at_batch)
     if manifest is None or not manifest["buckets"]:
@@ -172,19 +199,12 @@ def read_table(
     # table's life): every probe/merge re-read then samples one footer
     # instead of all current bucket versions (guide §6 small-file
     # overhead; measured on the index gates, round 13).
-    ms = "true" if merge_schema else "false"
-    if manifest.get("partition_col"):
-        parts = [
-            spark.read.option("basePath", p)
-            .option("mergeSchema", ms)
-            .parquet(p)
-            for p in paths
-        ]
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p, allowMissingColumns=True)
-    else:
-        df = spark.read.option("mergeSchema", ms).parquet(*paths)
+    df = (
+        spark.read.option("basePath", table_dir)
+        .option("mergeSchema", "true" if merge_schema else "false")
+        .parquet(*paths)
+        .drop(BUCKET_DIR_COL, VERSION_DIR_COL)
+    )
     return df if keep_bucket_col else df.drop(BUCKET_COL)
 
 
@@ -198,25 +218,23 @@ def vacuum(table_dir: str) -> list[str]:
     so unreferenced dirs are invisible) — but not concurrently with an
     active writer, whose staging dir is not yet referenced by design
     (single-writer assumption, as with any pointer-commit table format).
-    Returns removed paths."""
+    Only bucket dirs (``__bk=<int>``) and staging dirs are examined;
+    anything else under the table dir is left alone. Returns removed
+    paths."""
     manifest = read_manifest(table_dir)
     if manifest is None:
         return []
-    live = {(f"b{b}", v) for b, v in manifest["buckets"].items()}
-    for batch_id in history(table_dir):
-        snap = read_manifest(table_dir, at_batch=batch_id)
-        if snap:
-            live |= {(f"b{b}", v) for b, v in snap["buckets"].items()}
+    live = set(current_paths(table_dir, manifest)) | _snapshot_paths(table_dir)
     removed: list[str] = []
     for entry in sorted(os.listdir(table_dir)):
         p = os.path.join(table_dir, entry)
         if entry.startswith(".staging-"):
             shutil.rmtree(p, ignore_errors=True)
             removed.append(p)
-        elif entry.startswith("b") and os.path.isdir(p):
+        elif _BUCKET_DIR_RE.fullmatch(entry) and os.path.isdir(p):
             for v in sorted(os.listdir(p)):
-                if (entry, v) not in live:
-                    vp = os.path.join(p, v)
+                vp = os.path.join(p, v)
+                if vp not in live:
                     shutil.rmtree(vp, ignore_errors=True)
                     removed.append(vp)
     return removed
@@ -292,7 +310,7 @@ def merge_batch(
 
     ``partition_col`` (set at table creation, recorded in the manifest,
     fixed for the table's life): hive-partition every bucket version by
-    this column — ``b{k}/v{n}/{col}={v}/`` — so date-range reads prune
+    this column — ``__bk={k}/__v={n}/{col}={v}/`` — so date-range reads prune
     files via Catalyst PartitionFilters (SURVEY §4: the reference's
     (donated_at, donor/pot) composite indexes map to "partition by date,
     cluster by key-hash"). Merge correctness is unaffected by rows whose
@@ -391,7 +409,7 @@ def merge_batch(
         )
 
         # one write job, laid out per bucket. partitionBy drops the layout
-        # column from the data files, so duplicate it: __bp for layout,
+        # column from the data files, so duplicate it: __bk for layout,
         # __bucket stays as a data column for future bucket-pruned merges.
         # The repartition hashes rows to one task per bucket BEFORE the
         # partitioned write — otherwise every write task fragments a file
@@ -400,10 +418,10 @@ def merge_batch(
         # shuffle moves only the touched buckets' rows.
         staging = os.path.join(table_dir, f".staging-v{batch_id}")
         shutil.rmtree(staging, ignore_errors=True)  # retry hygiene
-        layout = ["__bp"] + ([partition_col] if partition_col else [])
+        layout = [BUCKET_DIR_COL] + ([partition_col] if partition_col else [])
         (
             merged.repartition(len(touched), F.col(BUCKET_COL))
-            .withColumn("__bp", F.col(BUCKET_COL))
+            .withColumn(BUCKET_DIR_COL, F.col(BUCKET_COL))
             .write.partitionBy(*layout)
             .mode("overwrite")
             .parquet(staging)
@@ -414,8 +432,8 @@ def merge_batch(
         vname = f"v{batch_id}"
         prev = {str(b): manifest["buckets"].get(str(b)) for b in touched}
         for b in touched:
-            src = os.path.join(staging, f"__bp={b}")
-            dst = os.path.join(_bucket_dir(table_dir, b), vname)
+            src = _bucket_dir(staging, b)
+            dst = version_dir(table_dir, b, vname)
             os.makedirs(_bucket_dir(table_dir, b), exist_ok=True)
             # dst can pre-exist only when THIS batch_id is being retried
             # after a crash; its content was already consumed into staging
@@ -450,16 +468,12 @@ def merge_batch(
             # GC strictly after the swap: failures leave garbage, not loss.
             # Only versions no snapshot references (mixed-mode tables keep
             # whatever history they accumulated until vacuum_history).
-            snap_live: set[tuple[str, str]] = set()
-            for hb in history(table_dir):
-                snap = read_manifest(table_dir, at_batch=hb)
-                if snap:
-                    snap_live |= {(f"b{b}", v) for b, v in snap["buckets"].items()}
+            snap_live = _snapshot_paths(table_dir)
             for b, old_v in prev.items():
-                if old_v and old_v != vname and (f"b{b}", old_v) not in snap_live:
-                    shutil.rmtree(
-                        os.path.join(_bucket_dir(table_dir, b), old_v), ignore_errors=True
-                    )
+                if old_v and old_v != vname:
+                    old = version_dir(table_dir, b, old_v)
+                    if old not in snap_live:
+                        shutil.rmtree(old, ignore_errors=True)
         shutil.rmtree(staging, ignore_errors=True)
         return touched
     finally:

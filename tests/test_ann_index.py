@@ -110,7 +110,7 @@ def test_probe_reads_only_colliding_buckets(spark, tmp_path):
     }
     sub = silver.read_table(spark, idx, buckets=sorted(probed))
     files = {r[0] for r in sub.select(F.input_file_name()).distinct().collect()}
-    assert files and all(any(f"/b{b}/" in f for b in probed) for f in files)
+    assert files and all(any(f"{silver._bucket_dir(idx, b)}/" in f for b in probed) for f in files)
 
 
 def test_stream_ann_end_to_end(spark, tmp_path):

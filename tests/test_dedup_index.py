@@ -90,7 +90,7 @@ def test_probe_reads_only_colliding_buckets(spark, tmp_path):
     assert probed < all_buckets or len(all_buckets) <= len(probed) <= 4
     sub = silver.read_table(spark, idx, buckets=sorted(probed))
     files = {r[0] for r in sub.select(F.input_file_name()).distinct().collect()}
-    assert all(any(f"/b{b}/" in f for b in probed) for f in files)
+    assert all(any(f"{silver._bucket_dir(idx, b)}/" in f for b in probed) for f in files)
 
 
 def test_stream_dedup_end_to_end(spark, tmp_path):

@@ -143,6 +143,21 @@ def test_donors_leaderboard_semi_join_and_order(spark):
     got = [r["id"] for r in domain.donors_leaderboard(accounts, donations).collect()]
     assert got == ["b", "a"]  # idle has no donations → semi-join drops it
 
+    # tied totals break by id ascending, with and without k
+    tied = spark.createDataFrame(
+        [("d", D("50.00")), ("c", D("50.00")), ("b", D("99.00")), ("a", D("50.00"))],
+        "id string, total_donations_out_usd decimal(20,2)",
+    )
+    ties = donations
+    for donor in ("c", "d"):
+        ties = ties.unionByName(
+            donations.filter(F.col("id") == 1).withColumn("donor_id", F.lit(donor))
+        )
+    got = [r["id"] for r in domain.donors_leaderboard(tied, ties).collect()]
+    assert got == ["b", "a", "c", "d"]
+    got = [r["id"] for r in domain.donors_leaderboard(tied, ties, k=3).collect()]
+    assert got == ["b", "a", "c"]
+
 
 def test_current_applications_latest_review_wins(spark):
     from django_indexer_spark.plans.domain import current_applications

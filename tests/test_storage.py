@@ -105,7 +105,7 @@ def test_bucketed_tables_join_without_exchange(spark, tmp_path):
 def test_silver_date_partition_prunes_files(spark, tmp_path):
     """Date-partitioned silver (SURVEY §4: donations' donated_at composite
     indexes → partition by date inside each key-hash bucket version): a
-    donated-date range predicate must reach every bucket scan as a
+    donated-date range predicate must reach the table's single scan as a
     PartitionFilter, and only the matching date dirs' files are read.
     Merge semantics must survive a key CHANGING its partition value (the
     whole bucket version is rewritten, so the old date dir is superseded
@@ -128,15 +128,22 @@ def test_silver_date_partition_prunes_files(spark, tmp_path):
         batch_id=1, n_buckets=4, partition_col="donated_date",
     )
     # layout: every bucket version contains hive date dirs
-    assert glob.glob(f"{d}/b*/v1/donated_date=2024-01-0*"), "no hive date dirs"
+    v1_paths = silver.current_paths(d, silver.read_manifest(d))
+    assert v1_paths and all(
+        glob.glob(os.path.join(p, "donated_date=2024-01-0*")) for p in v1_paths
+    ), "no hive date dirs"
 
-    # range predicate prunes: PartitionFilters in every scan + only
-    # matching dirs' files are touched
+    # range predicate prunes: ONE file scan over every bucket version (no
+    # per-bucket union) carrying the PartitionFilters, and only matching
+    # dirs' files are touched
     t = silver.read_table(spark, d)
+    assert not {silver.BUCKET_DIR_COL, silver.VERSION_DIR_COL} & set(t.columns)
     q = t.filter(
         (F.col("donated_date") >= "2024-01-02") & (F.col("donated_date") <= "2024-01-03")
     )
     plan = q._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 1, plan
+    assert "Union" not in plan, plan
     assert plan.count("PartitionFilters: [") >= 1
     assert "isnotnull(donated_date" in plan
     files = {r[0] for r in q.select(F.input_file_name()).distinct().collect()}

@@ -128,7 +128,10 @@ def test_stream_ingest_available_now_and_resume(spark, tmp_path):
 
     m = _silver.read_manifest(f"{out}/donations")
     assert m["partition_col"] == "donated_date"
-    assert _glob.glob(f"{out}/donations/b*/v*/donated_date=*"), "no hive date dirs"
+    assert any(
+        _glob.glob(os.path.join(p, "donated_date=*"))
+        for p in _silver.current_paths(f"{out}/donations", m)
+    ), "no hive date dirs"
     assert all(r["donated_date"] is not None for r in after.values())
 
 
@@ -197,11 +200,11 @@ def test_silver_merge_rewrites_only_touched_buckets(spark, tmp_path):
             assert m2["buckets"][b] == v == "v1"
     assert m2["buckets"][str(touched[0])] == "v2"
     # superseded touched-bucket version is GC'd after publish
-    assert not os.path.exists(os.path.join(d, f"b{touched[0]}", "v1"))
+    assert not os.path.exists(silver.version_dir(d, touched[0], "v1"))
     # pre-write repartition coalesces each bucket version to ONE data file
     # (no tasks-x-buckets small-file fragmentation per trigger)
     v2_files = [
-        f for f in os.listdir(os.path.join(d, f"b{touched[0]}", "v2"))
+        f for f in os.listdir(silver.version_dir(d, touched[0], "v2"))
         if f.endswith(".parquet")
     ]
     assert len(v2_files) == 1, v2_files
@@ -211,7 +214,7 @@ def test_silver_merge_rewrites_only_touched_buckets(spark, tmp_path):
     # "second micro-batch reads only touched partitions" guarantee)
     pruned = silver.read_table(spark, d, buckets=touched, keep_bucket_col=True)
     files = pruned.inputFiles()
-    assert files and all(f"/b{touched[0]}/" in f for f in files)
+    assert files and all(f"{silver._bucket_dir(d, touched[0])}/" in f for f in files)
     full = silver.read_table(spark, d, keep_bucket_col=True)
     assert len(full.inputFiles()) > len(files)
 
@@ -427,11 +430,15 @@ def test_silver_vacuum_removes_only_unreferenced_dirs(spark, tmp_path):
     # plant crash debris: an abandoned staging dir and an orphan version
     os.makedirs(os.path.join(d, ".staging-v99", "__bp=0"))
     some_bucket = next(iter(silver.read_manifest(d)["buckets"]))
-    orphan = os.path.join(d, f"b{some_bucket}", "v99")
+    orphan = silver.version_dir(d, some_bucket, "v99")
     os.makedirs(orphan)
+    # a foreign dir under the table dir is not a bucket dir: left alone
+    foreign = os.path.join(d, "bak", "keep")
+    os.makedirs(foreign)
     removed = silver.vacuum(d)
     assert os.path.join(d, ".staging-v99") in removed and orphan in removed
     assert not os.path.exists(orphan)
+    assert os.path.isdir(foreign) and not any(r.startswith(os.path.join(d, "bak")) for r in removed)
     # every live (manifest-referenced) version dir survives, data intact
     after = {r["k"]: (r["v"], r["version"]) for r in silver.read_table(spark, d).collect()}
     assert after == before
